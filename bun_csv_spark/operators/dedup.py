@@ -599,6 +599,10 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
+    if max_iter < 1:
+        raise ValueError(
+            f"connected_components: max_iter must be >= 1, got {max_iter}"
+        )
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     sym = edges.unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.distinct().repartition("b").localCheckpoint()

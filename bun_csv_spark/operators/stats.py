@@ -8,10 +8,17 @@ inference (reference: src/cli/commands/stats.ts:17-113):
 - <=10 uniques and >100 rows         -> "categorical"
 - else                               -> "string"
 
-One job computes every column's stats in a single pass (one wide agg), so
-the scan cost is paid once regardless of column count. uniqueCount is exact
-(countDistinct) per the oracle requirement; at 100 TB swap in
-approx_count_distinct via ``approximate=True``.
+Plan shape: one lazy plan over a long (column index, value) form, so its
+size does not grow with the column count. The scan explodes each row into
+one narrow record per column; a first groupBy on (column, value) collapses
+the records to distinct values (fixed-width buffers, so a hash aggregate
+with a map-side combine); a second groupBy on the column folds the
+distinct values into the stats. One scan, two small shuffles (the second
+carries at most one partial row per column per task), and no Spark job
+runs until the caller acts on the result. The exact unique count is the
+number of first-level groups — no ``countDistinct``, so no ``Expand``
+copying every row once per distinct aggregate — and the numeric-string
+regex runs once per distinct value, not per row.
 """
 
 from __future__ import annotations
@@ -24,81 +31,6 @@ from pyspark.sql import types as T
 
 from bun_csv_spark.functions.coercion import NUMBER_RE
 
-
-def column_stats(
-    df: DataFrame, columns: list[str] | None = None, approximate: bool = False
-) -> DataFrame:
-    """One row per column: (column, count, null_count, unique_count,
-    min_num, max_num, mean_num, min_str, max_str, inferred_type)."""
-    cols = columns or df.columns
-    total = F.count(F.lit(1))
-    aggs: list = [total.alias("__total")]
-    for c in cols:
-        col = F.col(c)
-        s = col.cast("string")
-        is_num_type = isinstance(df.schema[c].dataType, _NUM_TYPES)
-        numeric = col.cast("double") if is_num_type else F.when(s.rlike(NUMBER_RE), s.cast("double"))
-        distinct = (
-            F.approx_count_distinct(col) if approximate else F.countDistinct(col)
-        )
-        aggs += [
-            F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"),
-            distinct.alias(f"__uniq_{c}"),
-            F.min(numeric).alias(f"__minn_{c}"),
-            F.max(numeric).alias(f"__maxn_{c}"),
-            F.avg(numeric).alias(f"__mean_{c}"),
-            F.min(s).alias(f"__mins_{c}"),
-            F.max(s).alias(f"__maxs_{c}"),
-            F.sum(
-                F.when(col.isNotNull() & ~F.coalesce(s.rlike(NUMBER_RE), F.lit(False)), 1).otherwise(0)
-            ).alias(f"__nonnum_{c}"),
-        ]
-    row = df.agg(*aggs).first()
-
-    total_n = row["__total"]
-    out_rows = []
-    for c in cols:
-        nulls = row[f"__nulls_{c}"]
-        uniq = row[f"__uniq_{c}"]
-        non_num = row[f"__nonnum_{c}"]
-        non_null = total_n - nulls
-        if non_null > 0 and non_num == 0:
-            inferred = "number"
-        elif uniq <= 10 and total_n > 100:
-            inferred = "categorical"
-        else:
-            inferred = "string"
-        out_rows.append(
-            (
-                c,
-                total_n,
-                nulls,
-                uniq,
-                row[f"__minn_{c}"],
-                row[f"__maxn_{c}"],
-                row[f"__mean_{c}"],
-                row[f"__mins_{c}"],
-                row[f"__maxs_{c}"],
-                inferred,
-            )
-        )
-    schema = T.StructType(
-        [
-            T.StructField("column", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("null_count", T.LongType()),
-            T.StructField("unique_count", T.LongType()),
-            T.StructField("min_num", T.DoubleType()),
-            T.StructField("max_num", T.DoubleType()),
-            T.StructField("mean_num", T.DoubleType()),
-            T.StructField("min_str", T.StringType()),
-            T.StructField("max_str", T.StringType()),
-            T.StructField("inferred_type", T.StringType()),
-        ]
-    )
-    return df.sparkSession.createDataFrame(out_rows, schema)
-
-
 _NUM_TYPES = (
     T.ByteType,
     T.ShortType,
@@ -108,6 +40,115 @@ _NUM_TYPES = (
     T.DoubleType,
     T.DecimalType,
 )
+# types whose string cast can map two distinct values to one string
+# (array/struct/map elements may contain the separators, binary decodes
+# with replacement, a local timestamp repeats in a DST fold); these carry
+# a second, injective grouping key
+_LOSSY_STRING_TYPES = (
+    T.ArrayType,
+    T.StructType,
+    T.MapType,
+    T.BinaryType,
+    T.TimestampType,
+)
+_JSON_MICROS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+
+def column_stats(
+    df: DataFrame, columns: list[str] | None = None, approximate: bool = False
+) -> DataFrame:
+    """One row per column, in ``columns`` order: (column, count,
+    null_count, unique_count, min_num, max_num, mean_num, min_str,
+    max_str, inferred_type). Lazy: building it launches no job.
+
+    Value semantics: ``unique_count`` counts distinct non-null values as
+    ``countDistinct`` does (NaN equals NaN, -0.0 equals 0.0; for floats
+    nested inside arrays/structs -0.0 and 0.0 count apart); numeric stats
+    use the value itself for numeric types and the strings matching
+    ``NUMBER_RE`` otherwise; an empty input gives count 0 for every
+    column. ``approximate`` is kept for callers: the distinct count is a
+    by-product of the first grouping, exact at no extra cost, so both
+    settings return it exactly."""
+    cols = list(columns or df.columns)
+    null_str, null_double = F.lit(None).cast("string"), F.lit(None).cast("double")
+    slots = []
+    for i, c in enumerate(cols):
+        col, dtype = F.col(c), df.schema[c].dataType
+        slots.append(
+            F.struct(
+                F.lit(i).alias("i"),
+                col.cast("string").alias("v"),
+                (
+                    F.to_json(F.struct(col), _JSON_MICROS)
+                    if isinstance(dtype, _LOSSY_STRING_TYPES)
+                    else null_str
+                ).alias("u"),
+                (col.cast("double") if isinstance(dtype, _NUM_TYPES) else null_double).alias("x"),
+                F.lit(1).alias("w"),
+            )
+        )
+    long = df.select(F.inline(F.array(*slots)))
+    # one weight-0 row per column, so an empty input still reports them all
+    sentinels = df.sparkSession.range(0, len(cols), 1, 1).select(
+        F.col("id").cast("int").alias("i"),
+        null_str.alias("v"),
+        null_str.alias("u"),
+        null_double.alias("x"),
+        F.lit(0).alias("w"),
+    )
+    values = (
+        long.unionByName(sentinels)
+        .groupBy("i", "v", "u")
+        .agg(F.sum("w").alias("n"), F.min("x").alias("x"))
+    )
+
+    v, n, x = F.col("v"), F.col("n"), F.col("x")
+    # numeric view of a distinct value: the value itself for numeric
+    # types, else the string when it looks like a number
+    num = F.coalesce(x, F.when(v.rlike(NUMBER_RE), v.cast("double")))
+    # -0.0 and 0.0 are distinct strings but one value to countDistinct
+    both_zeros = F.bool_or((v == "-0.0") & x.isNotNull()) & F.bool_or(
+        (v == "0.0") & x.isNotNull()
+    )
+    stats = values.groupBy("i").agg(
+        F.sum(n).alias("count"),
+        F.sum(F.when(v.isNull(), n)).alias("null_count"),
+        (F.count(v) - both_zeros.cast("long")).alias("unique_count"),
+        F.min(num).alias("min_num"),
+        F.max(num).alias("max_num"),
+        (F.sum(num * n) / F.sum(F.when(num.isNotNull(), n))).alias("mean_num"),
+        F.min(v).alias("min_str"),
+        F.max(v).alias("max_str"),
+        F.sum(F.when(~v.rlike(NUMBER_RE), n).otherwise(0)).alias("__nonnum"),
+    )
+    inferred = (
+        F.when(
+            (F.col("count") > F.col("null_count")) & (F.col("__nonnum") == 0),
+            "number",
+        )
+        .when((F.col("unique_count") <= 10) & (F.col("count") > 100), "categorical")
+        .otherwise("string")
+    )
+    names = F.array(*[F.lit(c) for c in cols])
+    return (
+        stats.coalesce(1)
+        .sortWithinPartitions("i")
+        .select(
+            F.element_at(names, F.col("i") + 1).alias("column"),
+            "count",
+            "null_count",
+            "unique_count",
+            "min_num",
+            "max_num",
+            "mean_num",
+            "min_str",
+            "max_str",
+            inferred.alias("inferred_type"),
+        )
+    )
 
 
 def validate_rules(

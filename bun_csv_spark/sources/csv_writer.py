@@ -7,7 +7,9 @@ src/cli/commands/convert.ts:20-107 (csv/tsv/json/jsonl).
 Spark mapping: quote-minimal and quote-all write natively
 (``df.write.csv``); quote-nonnumeric has no native option, so the line is
 assembled as an expression pipeline and written through the text sink —
-still distributed, still codegen'd, just explicit quoting logic.
+still distributed, still codegen'd, just explicit quoting logic. The
+header rides on the first line of each partition, so every part file
+starts with it, as the native writer's files do.
 """
 
 from __future__ import annotations
@@ -92,7 +94,9 @@ def write_csv(
     """Distributed CSV write with the reference quote styles.
 
     minimal/all ride the native writer (splittable, no Python);
-    nonnumeric/escape_formulae assemble lines explicitly."""
+    nonnumeric/escape_formulae assemble lines explicitly. Either way every
+    non-empty part file starts with the header line and an empty frame
+    leaves a header-only file, so ``read_csv`` reads the directory back."""
     if quote_style in ("minimal", "all") and not escape_formulae:
         (
             df.write.mode(mode)
@@ -113,11 +117,33 @@ def write_csv(
         quote_style=quote_style,
         escape_formulae=escape_formulae,
     )
-    out = df.select(line.alias("value"))
     if header:
-        hdr = delimiter.join(df.columns)
-        out = df.sparkSession.createDataFrame([(hdr,)], "value string").unionAll(out)
-    out.write.mode(mode).option("lineSep", newline).text(path)
+        hdr = delimiter.join(df.columns) + newline
+        # the id's low 33 bits are the row's position in its partition, so
+        # this prefixes the header to the first line of every part file
+        first_in_part = F.monotonically_increasing_id() % (1 << 33) == 0
+        line = F.when(first_in_part, F.concat(F.lit(hdr), line)).otherwise(line)
+    df.select(line.alias("value")).write.mode(mode).option("lineSep", newline).text(path)
+    if header:
+        _fill_empty_parts(df.sparkSession, path, hdr)
+
+
+def _fill_empty_parts(spark, path: str, text: str) -> None:
+    """Write ``text`` into every empty part file under ``path``.
+
+    The text sink always writes partition 0's file, empty when that
+    partition has no rows (an empty frame, or an empty first split); the
+    native CSV writer puts the header there instead. A driver-side
+    listing through the session's Hadoop filesystem, no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    for status in fs.listStatus(jpath):
+        if status.getLen() == 0 and status.getPath().getName().startswith("part-"):
+            out = fs.create(status.getPath(), True)
+            try:
+                out.write(bytearray(text.encode("utf-8")))
+            finally:
+                out.close()
 
 
 def append_csv_file(

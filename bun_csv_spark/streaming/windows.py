@@ -21,10 +21,13 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# `spark.sql.shuffle.partitions` is session-global: two overlapping drains
-# pinning different counts would observe each other's value and a racy
-# interleave could restore the wrong one. The lock serializes pinned drains
-# on this process — correct by construction rather than by harness habit.
+# `spark.sql.shuffle.partitions` and the state-store provider are
+# session-global: two overlapping drains pinning different values would
+# observe each other's value and a racy interleave could restore the wrong
+# one. The lock serializes PINNED drains only (a drain whose pin is None
+# never takes it), so an unpinned drain that overlaps a pinned one can
+# still plan against the pinned drain's temporary values; callers that mix
+# the two on one session must not overlap them.
 # RLock: the provider pin nests inside the partition pin on one thread.
 _PIN_LOCK = threading.RLock()
 

@@ -92,6 +92,17 @@ def test_cli_stats(capsys, spark, people_csv):
     assert byc["city"]["unique_count"] == 3
 
 
+def test_cli_stats_header_only(capsys, spark, write_csv_file):
+    import json
+
+    path = write_csv_file("name,age,city\n", name="header_only.csv")
+    rc, out, _ = run_cli(capsys, spark, ["-f", "json", "stats", path])
+    rows = json.loads(out)
+    assert rc == 0
+    assert [r["column"] for r in rows] == ["name", "age", "city"]
+    assert all(r["count"] == 0 and r["null_count"] == 0 for r in rows)
+
+
 def test_cli_benchmark(capsys, spark, people_csv):
     rc, out, _ = run_cli(capsys, spark, ["benchmark", "--runs", "1", people_csv])
     assert rc == 0 and "MB/s" in out and "runs=1" in out

@@ -152,6 +152,15 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_rejects_nonpositive_max_iter(spark, max_iter):
+    from bun_csv_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(pairs, max_iter=max_iter)
+
+
 def test_detect_language(spark):
     df = spark.createDataFrame(
         [

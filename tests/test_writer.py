@@ -121,3 +121,64 @@ def test_append_csv_file_multipartition_order(spark, tmp_path):
     lines = p.read_text(encoding="utf-8").splitlines()[1:]
     assert [ln.split(",")[0] for ln in lines] == [str(i) for i in range(200)]
     assert lines[7] == "7,v√7"
+
+
+# --- expression-path writer: every part file carries the header ----------
+
+_TRICKY = [
+    (1, 'say "hi"', 1.5),
+    (2, "a,b", None),
+    (3, "two\nlines", 2.0),
+    (4, "=SUM(A1)", 0.0),
+    (5, None, 4.25),
+    (6, "", 6.0),
+]
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+@pytest.mark.parametrize("escape", [False, True])
+def test_write_nonnumeric_reads_back(spark, tmp_path, partitions, escape):
+    from bun_csv_spark.sources.csv_reader import CSVOptions, read_csv
+
+    df = spark.createDataFrame(_TRICKY, "id int, s string, v double").repartition(
+        partitions, "id"
+    )
+    out = str(tmp_path / "nn")
+    write_csv(df, out, quote_style="nonnumeric", escape_formulae=escape)
+    parts = sorted(glob.glob(f"{out}/part-*"))
+    assert parts and all(open(p).readline() == "id,s,v\n" for p in parts)
+    back = read_csv(spark, out, CSVOptions(multiline=True))
+    assert back.columns == ["id", "s", "v"]
+    got = sorted((int(r.id), r.s, r.v) for r in back.collect())
+    want = sorted(
+        (i, "'" + s if escape and s and s[0] == "=" else s, None if v is None else str(v))
+        for i, s, v in _TRICKY
+    )
+    assert got == want
+
+
+def test_write_nonnumeric_empty_first_partition(spark, tmp_path):
+    from bun_csv_spark.sources.csv_reader import CSVOptions, read_csv
+
+    df = spark.createDataFrame(_TRICKY, "id int, s string, v double").repartition(
+        4, "id"
+    )
+    # keep one partition's rows only, so partition 0 writes an empty file
+    keep = df.withColumn("p", F.spark_partition_id()).filter("p = 3").drop("p")
+    n = keep.count()
+    out = str(tmp_path / "nn")
+    write_csv(keep, out, quote_style="nonnumeric")
+    parts = sorted(glob.glob(f"{out}/part-*"))
+    assert all(open(p).readline() == "id,s,v\n" for p in parts)
+    assert read_csv(spark, out, CSVOptions(multiline=True)).count() == n
+
+
+def test_write_nonnumeric_empty_frame_is_header_only(spark, tmp_path):
+    from bun_csv_spark.sources.csv_reader import read_csv
+
+    df = spark.createDataFrame(_TRICKY, "id int, s string, v double").limit(0)
+    out = str(tmp_path / "nn")
+    write_csv(df, out, quote_style="nonnumeric")
+    assert read_out(out) == "id,s,v\n"
+    back = read_csv(spark, out)
+    assert back.columns == ["id", "s", "v"] and back.count() == 0
