@@ -197,7 +197,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         opts = dataclasses.replace(opts, with_row_index=True)
         df = read_csv(spark, path, opts)
-        rows = [r.asDict() for r in df.orderBy(F.col(ROW_IDX)).tail(args.n)]
+        # top-k on the file-order index, not a global sort
+        last = df.orderBy(F.col(ROW_IDX).desc()).limit(args.n).collect()
+        rows = [r.asDict() for r in reversed(last)]
         for r in rows:
             r.pop(ROW_IDX, None)
         print(render(rows, fmt))
@@ -266,19 +268,21 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         opts = dataclasses.replace(opts, with_row_index=True)
         df, errors = read_csv_with_errors(spark, path, opts)
         n = df.count()
-        errs = errors.orderBy("row").collect() if errors is not None else []
-        if not errs:
+        n_errs = errors.count() if errors is not None else 0
+        if not n_errs:
             print("OK: CSV is valid")
         else:
-            print(f"INVALID: {len(errs)} issue(s):")
-            for e in errs[:10]:
+            print(f"INVALID: {n_errs} issue(s):")
+            # the codes of one row sort by name in the order the tokenizer
+            # emits them (quote errors, then the field-count error)
+            for e in errors.orderBy("row", "code").limit(10).collect():
                 print(f"  Row {e.row}: [{e.code}] {e.message}")
-            if len(errs) > 10:
-                print(f"  ... and {len(errs) - 10} more")
+            if n_errs > 10:
+                print(f"  ... and {n_errs - 10} more")
         print(f"\nRows: {n:,}")
         print(f"Columns: {len([c for c in df.columns if not c.startswith('__')])}")
         print(f"Headers: {', '.join(c for c in df.columns if not c.startswith('__'))}")
-        return 0 if not errs else 1
+        return 0 if not n_errs else 1
 
     if args.command == "stats":
         df = read_csv(spark, path, opts)

@@ -60,10 +60,10 @@ def with_row_index(df: DataFrame, name: str = ROW_IDX) -> DataFrame:
     The reference exposes 0-based ``row.index`` in file order
     (reference: src/ts/row.ts:88-89). Spark has no implicit row identity;
     this delegates to ``operators.util.with_file_order_index`` — a pure
-    DataFrame-API index (spark_partition_id + a tiny per-partition count
-    aggregation + broadcast offset join; no ``.rdd``, no Python hop, no
-    shuffle). One extra stats job; at 100 TB prefer carrying a natural key
-    instead when one exists.
+    DataFrame-API index (monotonically_increasing_id + a tiny
+    per-partition count aggregation whose offsets enter the plan as one
+    constant; no ``.rdd``, no Python hop, no join). One extra stats job;
+    at 100 TB prefer carrying a natural key instead when one exists.
     """
     from bun_csv_spark.operators.util import with_file_order_index
 

@@ -2,73 +2,97 @@
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def with_file_order_index(
-    df: DataFrame, name: str = "__row_idx", order_col: str | None = None
+    df: DataFrame,
+    name: str = "__row_idx",
+    split: tuple[str, ...] = (),
+    keep: Column | None = None,
 ) -> DataFrame:
-    """Attach a deterministic 0-based row index — pure DataFrame API.
+    """Attach a deterministic 0-based file-order row index, pure DataFrame
+    API, with one stats job at build time.
 
-    Replaces ``df.rdd.zipWithIndex()`` (which round-trips every row through
-    Python serialization) with three JVM-side steps:
+    ``monotonically_increasing_id`` (mid) is ``partition << 33`` plus the
+    row's position in its task, so a row's index is its mid plus a
+    constant per split. One aggregation grouped by (partition, *split)
+    returns each split's row count and mid range, and the driver turns
+    them into cumulative offsets. Splits order by the ``split`` columns,
+    then by partition; pass the file source's ``_metadata.file_path`` and
+    ``_metadata.file_block_start`` so that multi-file directories index in
+    (path, offset) order even when Spark packs several small files into
+    one partition out of name order. With no ``split`` each partition is
+    one split in partition order, which is ``zipWithIndex``'s order.
 
-    1. tag rows with ``spark_partition_id()`` + ``monotonically_increasing_id()``;
-    2. one tiny aggregation (one row per task — bounded by cluster
-       parallelism, not data size) collects per-partition row counts plus
-       the partition's min ``order_col`` (pass the file source's
-       ``_metadata.file_block_start`` to order partitions by file offset;
-       default orders by partition id, matching zipWithIndex); cumulative
-       offsets are computed on the driver;
-    3. broadcast-join the offsets back. When ``monotonically_increasing_id``
-       is contiguous within every partition (its documented behavior —
-       verified from the collected stats), the index is
-       ``offset + (mid - partition_min_mid)`` with NO shuffle at all;
-       otherwise fall back to a partition-local ``row_number`` window.
+    The offsets enter the plan as one constant: a JSON array, indexed by
+    partition, of ``{split key: offset}`` maps, parsed once by constant
+    folding. There is no join, no ``createDataFrame`` and no shuffle; a
+    row looks up only the splits of its own partition. The plan holds
+    O(splits) constants, like the start offsets ``zipWithIndex`` ships.
 
-    Deterministic whenever the upstream plan is (file scans are). Like
-    zipWithIndex this evaluates the plan twice (stats job + real job).
+    ``keep``: a predicate over ``df``. When given, only the rows where it
+    holds are returned, and ``__rank`` numbers them 0-based in file order
+    among the kept rows. The same stats job counts the kept rows of each
+    split, and a second mid taken after the filter gives the position
+    within the partition's kept rows.
+
+    Deterministic whenever the upstream plan is (file scans are). Raises
+    when mid is not contiguous within a split.
     """
-    base = df.select(
-        "*",
-        F.spark_partition_id().alias("__pid"),
-        F.monotonically_increasing_id().alias("__mid"),
+    key = (
+        F.concat_ws("\x00", *[F.col(c).cast("string") for c in split])
+        if split
+        else F.lit("")
     )
-    ord_expr = F.min(order_col) if order_col else F.min("__pid")
+    base = df.select("*", key.alias("__split"), F.monotonically_increasing_id().alias("__mid"))
     stats = (
-        base.groupBy("__pid")
+        base.groupBy(F.shiftright("__mid", 33).alias("pid"), "__split", *split)
         .agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.min("__mid").alias("__mn"),
-            F.max("__mid").alias("__mx"),
-            ord_expr.alias("__ordk"),
+            F.count(F.lit(1)).alias("n"),
+            F.min("__mid").alias("lo"),
+            F.max("__mid").alias("hi"),
+            F.count_if(F.lit(True) if keep is None else keep).alias("k"),
         )
         .collect()
     )
-    stats.sort(key=lambda r: (r["__ordk"], r["__pid"]))
-    contiguous = all(r["__mx"] - r["__mn"] + 1 == r["__cnt"] for r in stats)
-    offsets, acc = [], 0
+    stats.sort(key=lambda r: (*(r[c] for c in split), r["pid"]))
+    n_parts = 1 + max((r["pid"] for r in stats), default=-1)
+    shift: list[dict] = [{} for _ in range(n_parts)]
+    kshift: list[dict] = [{} for _ in range(n_parts)]
+    rows = kept = 0
     for r in stats:
-        offsets.append((r["__pid"], acc, r["__mn"]))
-        acc += r["__cnt"]
-    offs = df.sparkSession.createDataFrame(
-        offsets, "__pid int, __off long, __pmn long"
-    )
-    out = base.join(F.broadcast(offs), "__pid")
-    if contiguous:
-        idx = F.col("__off") + (F.col("__mid") - F.col("__pmn"))
-    else:  # pragma: no cover — mid has been contiguous on every Spark release
-        from pyspark.sql import Window
+        if r["hi"] - r["lo"] + 1 != r["n"]:
+            raise RuntimeError(
+                f"monotonically_increasing_id is not contiguous within split "
+                f"{r['__split']!r}; cannot build a file-order index"
+            )
+        pid, s = r["pid"], r["__split"]
+        shift[pid][s] = rows - r["lo"]
+        kshift[pid][s] = kept - (pid << 33)
+        rows += r["n"]
+        kept += r["k"]
+    # the second mid also counts the kept rows of the splits its partition
+    # ran earlier (in mid order)
+    ran = [0] * n_parts
+    for r in sorted(stats, key=lambda r: r["lo"]):
+        kshift[r["pid"]][r["__split"]] -= ran[r["pid"]]
+        ran[r["pid"]] += r["k"]
 
-        w = Window.partitionBy("__pid").orderBy("__mid")
-        idx = F.col("__off") + F.row_number().over(w) - 1
-    return (
-        out.withColumn(name, idx.cast("long"))
-        .drop("__pid", "__mid", "__off", "__pmn")
-    )
+    def offset(table: list[dict]) -> Column:
+        parsed = F.from_json(F.lit(json.dumps(table)), "array<map<string,bigint>>")
+        return F.get(parsed, F.spark_partition_id())[F.col("__split")]
+
+    out = base.withColumn(name, F.col("__mid") + offset(shift))
+    if keep is not None:
+        out = out.filter(keep).withColumn(
+            "__rank", F.monotonically_increasing_id() + offset(kshift)
+        )
+    return out.drop("__split", "__mid", *split)
 
 
 def stratified_sample(

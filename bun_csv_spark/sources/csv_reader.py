@@ -8,7 +8,7 @@ The reference is an option-rich CSV parser (reference: src/ts/parser.ts:
   comment/encoding/multiLine/trim). Splittable scans, pushdown, codegen —
   this is what runs on 100 TB.
 - **exact** (`spark.read.text` + a per-line RFC-4180 tokenizer in
-  mapInPandas): the fidelity path, engaged only when an option needs
+  mapInArrow): the fidelity path, engaged only when an option needs
   per-row identity or error parity that Spark's reader cannot express
   (fromLine/toLine, skipFirstNLines, maxRecordSize, relaxColumnCount*,
   `__parsed_extra` overflow, structured TooFewFields/TooManyFields
@@ -30,6 +30,8 @@ positional col0..colN names.
 
 from __future__ import annotations
 
+import codecs
+import re
 from dataclasses import dataclass
 from typing import Callable, Iterator
 
@@ -189,7 +191,7 @@ def _tokenize_line(
             quoted.append(True)
             if j == -1:
                 break
-            i = j + 1
+            i = j + len(delim)
         else:
             j = line.find(delim, i)
             raw = line[i:] if j == -1 else line[i:j]
@@ -197,7 +199,7 @@ def _tokenize_line(
             quoted.append(False)
             if j == -1:
                 break
-            i = j + 1
+            i = j + len(delim)
     return fields, quoted, errs
 
 
@@ -315,8 +317,7 @@ def reader_meta(
     reflects an applied preview limit."""
     opts = opts or CSVOptions()
     if opts.delimiter == "auto":
-        sample = _head_bytes(spark, path, opts.encoding)
-        delimiter, confidence = detect_delimiter(sample, quote=opts.quote_char)
+        delimiter, confidence = _sniff_delimiter(spark, path, opts)
     else:
         delimiter, confidence = opts.delimiter, 1.0
     head = spark.read.text(path).limit(2).collect()
@@ -343,9 +344,11 @@ def detect_encoding(head: bytes) -> str | None:
     bytes → UTF-16 (byte order from the first two bytes, LE default);
     any high bytes → UTF-8 when the window validates, else windows-1252
     (the reference returns .windows1252, NOT latin-1 — they differ on
-    0x80-0x9F); pure ASCII → UTF-8. Truncation behavior is also the
-    reference's: a multibyte char split at the window edge fails
-    isValidUtf8 there too."""
+    0x80-0x9F); pure ASCII → UTF-8. One departure: the reference's
+    isValidUtf8 fails on a multibyte character cut by the window edge and
+    so calls a UTF-8 file windows-1252. Here the window is checked with
+    an incremental decoder that leaves an incomplete final sequence
+    pending, unless the window holds the whole input."""
     for bom, name in _BOMS:
         if head.startswith(bom):
             return name
@@ -361,7 +364,9 @@ def detect_encoding(head: bytes) -> str | None:
         return "utf-16-le"
     if any(b > 127 for b in sample):
         try:
-            sample.decode("utf-8")
+            codecs.getincrementaldecoder("utf-8")().decode(
+                sample, final=len(head) <= len(sample)
+            )
             return "utf-8"
         except UnicodeDecodeError:
             return "cp1252"
@@ -476,8 +481,7 @@ def read_csv_with_errors(
     path, opts = _resolve_encoding(path, opts)
 
     if opts.delimiter == "auto":
-        sample = _head_bytes(spark, path, opts.encoding)
-        opts = _replace(opts, delimiter=detect_delimiter(sample, quote=opts.quote_char)[0])
+        opts = _replace(opts, delimiter=_sniff_delimiter(spark, path, opts)[0])
 
     if opts.multiline and _needs_exact_path(opts):
         raise CSVReadError(
@@ -523,6 +527,18 @@ def _head_bytes(spark: SparkSession, path: str, encoding: str, n: int = 8192) ->
         return head
     rows = spark.read.text(path).limit(12).collect()
     return "\n".join(r.value for r in rows)[:n]
+
+
+def _sniff_delimiter(spark: SparkSession, path: str, opts: CSVOptions) -> tuple[str, float]:
+    """detect_delimiter over the head of ``path``, minus comment lines (a
+    leading ``# ...`` note would otherwise vote for whatever punctuation
+    it happens to contain)."""
+    sample = _head_bytes(spark, path, opts.encoding)
+    if opts.comments:
+        sample = "\n".join(
+            ln for ln in sample.splitlines() if not ln.startswith(opts.comments)
+        )
+    return detect_delimiter(sample, quote=opts.quote_char)
 
 
 def _local_file_path(path: str) -> str | None:
@@ -680,85 +696,109 @@ def _read_native(spark: SparkSession, path: str, opts: CSVOptions) -> DataFrame:
 
 def _first_surviving_line(path: str, opts: CSVOptions) -> tuple[str | None, int]:
     """Driver-side twin of the exact path's line filters: the first line
-    (and its raw 0-based index) that survives skipFirstNLines, comment,
-    and empty-row skipping — resolved from the local head chunk when
-    possible. Returns (None, -1) when the path isn't local or no
-    qualifying line sits inside the chunk (caller probes via Spark)."""
+    that survives skipFirstNLines, comment and empty-row skipping, and its
+    0-based rank among the lines that pass the comment and empty-row
+    filters (the lines skipFirstNLines drops count too), resolved from the
+    local head chunk. Returns (None, -1) when the path isn't local or no
+    qualifying line sits inside the chunk (the caller probes via Spark)."""
     n = 65536
     head = _local_head_text(path, opts.encoding, n)
     if head is None:
         return None, -1
+    # the text source's line breaks (str.splitlines also breaks on \x0c,
+    # \x85, \u2028 ..., which would shift every rank after one)
+    lines = re.split(r"\r\n|\r|\n", head)
     complete = len(head.encode("utf-8", errors="replace")) < n
-    lines = head.splitlines()
-    if not complete and lines:
-        lines = lines[:-1]  # last line may be cut mid-way
+    if not complete or lines[-1] == "":
+        lines = lines[:-1]  # a cut last line, or the end of the text
+    rank = 0
     for idx, ln in enumerate(lines):
-        if idx < opts.skip_first_n_lines:
-            continue
-        if opts.comments and ln.startswith(opts.comments):
-            continue
-        if opts.skip_empty_rows and (
-            # must agree exactly with the distributed _JS_BLANK_RE filter —
-            # both use the ECMA-262 trim set (incl. \xa0 and ﻿)
-            ln.strip(_JS_WS_CHARS) == ""
-            if opts.skip_empty_rows == "greedy"
-            else ln == ""
+        if (opts.comments and ln.startswith(opts.comments)) or (
+            opts.skip_empty_rows
+            and (
+                # must agree exactly with _line_keep — both use the
+                # ECMA-262 trim set (incl. \xa0 and \ufeff)
+                ln.strip(_JS_WS_CHARS) == ""
+                if opts.skip_empty_rows == "greedy"
+                else ln == ""
+            )
         ):
             continue
-        return ln, idx
+        if idx >= opts.skip_first_n_lines:
+            return ln, rank
+        rank += 1
     return None, -1
+
+
+def _line_keep(opts: CSVOptions) -> Column:
+    """The comment and empty-row filters of the exact path as a predicate
+    over the raw ``line``."""
+    keep = F.lit(True)
+    if opts.comments:
+        keep = keep & ~F.col("line").startswith(opts.comments)
+    if opts.skip_empty_rows == "greedy":
+        # JS-trim semantics; must match _first_surviving_line
+        keep = keep & ~F.col("line").rlike(_JS_BLANK_RE)
+    elif opts.skip_empty_rows:
+        keep = keep & (F.col("line") != "")
+    return keep
 
 
 def _read_exact(
     spark: SparkSession, path: str, opts: CSVOptions
 ) -> tuple[DataFrame, DataFrame]:
-    import pandas as pd
+    """The line-level path: ``spark.read.text`` plus the Python tokenizer.
+
+    Line numbering takes one Spark job at build time:
+    ``with_file_order_index`` aggregates per file split (path, offset),
+    which yields both the raw file-order ``__row_idx`` and each kept line's
+    rank among the lines that pass the comment and empty-row filters. Both
+    enter the plan as constant per-split offsets, with no join and no
+    window. Multi-file directories number lines in (path, offset) order
+    as one concatenated stream; only the FIRST file's first line is the
+    header (per-part headers belong to the native path, which skips them
+    per file).
+
+    The record number (``__rec``) is the kept rank minus the rank of the
+    first record and minus ``from_line``'s start, so fromLine/toLine/
+    preview are plain range filters on it and it is the 0-based error
+    ``row`` the reference reports (errors.ts:49). Every filter runs before
+    the tokenizer, which is a ``mapInArrow`` pass. The parsed frame is
+    materialized once per read by ``localCheckpoint(eager=False)``, so the
+    data and error frames share one parse and a later read of a rewritten
+    file never sees an earlier read's rows.
+    """
+    import pyarrow as pa
 
     from bun_csv_spark.operators.util import with_file_order_index
 
-    # deterministic file-order line numbers, all JVM-side: partition order
-    # comes from the file source's (_metadata.file_path, file_block_start)
-    # — path first so multi-file directories order by name, offset second
-    # so splits of one file order by position — and the global offset from
-    # a tiny per-partition count aggregation (SURVEY §4.3.4). No .rdd, no
-    # Python round-trip of the data. Note: a multi-file directory is
-    # indexed as one concatenated stream; only the FIRST file's first line
-    # is treated as the header (per-part headers belong to the native
-    # path, which skips them per file).
     lines = spark.read.text(path).select(
         F.col("value").alias("line"),
-        F.struct(
-            F.col("_metadata.file_path").alias("p"),
-            F.col("_metadata.file_block_start").alias("s"),
-        ).alias("__blk"),
+        F.col("_metadata.file_path").alias("__path"),
+        F.col("_metadata.file_block_start").alias("__start"),
     )
-    df = with_file_order_index(lines, ROW_IDX, order_col="__blk").drop("__blk")
-
-    if opts.skip_first_n_lines:
-        df = df.filter(F.col(ROW_IDX) >= opts.skip_first_n_lines)
-    if opts.comments:
-        df = df.filter(~F.col("line").startswith(opts.comments))
-    if opts.skip_empty_rows:
-        blank = F.col("line") == ""
-        if opts.skip_empty_rows == "greedy":
-            # JS-trim semantics; must match _first_surviving_line's probe
-            blank = F.col("line").rlike(_JS_BLANK_RE)
-        df = df.filter(~blank)
+    df = with_file_order_index(
+        lines, ROW_IDX, split=("__path", "__start"), keep=_line_keep(opts)
+    )
 
     # header row = first surviving line. Local files resolve it driver-side
-    # from the head chunk (no Spark probe jobs — each costs a full job on
-    # the indexed frame); non-local or head-exhausted inputs fall back.
-    probe_line, probe_idx = _first_surviving_line(path, opts)
+    # from the head chunk (no Spark job); non-local or head-exhausted
+    # inputs fall back to one top-1 job on the indexed frame.
+    probe_line, probe_rank = _first_surviving_line(path, opts)
     if probe_line is None:
-        probed = df.orderBy(ROW_IDX).limit(1).collect()
+        probed = (
+            df.filter(F.col(ROW_IDX) >= opts.skip_first_n_lines)
+            .orderBy(ROW_IDX)
+            .limit(1)
+            .collect()
+        )
         if probed:
-            probe_line, probe_idx = probed[0]["line"], probed[0][ROW_IDX]
+            probe_line, probe_rank = probed[0]["line"], probed[0]["__rank"]
     if opts.has_header:
         if probe_line is None:
             raise CSVReadError(f"no header row found in {path}")
         raw_names, _, _ = _tokenize_line(probe_line, opts.delimiter, opts.quote_char)
         names = [h if h is not None else "" for h in raw_names]
-        df = df.filter(F.col(ROW_IDX) > probe_idx)
     else:
         width = (
             len(_tokenize_line(probe_line, opts.delimiter, opts.quote_char)[0])
@@ -769,22 +809,29 @@ def _read_exact(
     names = _apply_header_transforms(names, opts)
     n_cols = len(names)
 
+    # Record range. The reference counts 1-based FILE lines with the header
+    # as line 1 (parser.ts:1504-1513: fromRecord = fromLine - headerOffset
+    # - 1), so with a header every bound shifts down one record: fromLine=3
+    # starts at the 2nd data record. Clamped at record 1. Records start
+    # after the header, which is also past every skipFirstNLines line.
+    hdr_off = 1 if opts.has_header else 0
+    start = 1 if opts.from_line is None else max(1, opts.from_line - hdr_off)
+    rec = F.col("__rank") - (probe_rank + hdr_off + start - 1)
+    keep = (rec >= 0) if probe_line is not None else F.lit(False)
+    if opts.to_line is not None:
+        keep = keep & (rec <= opts.to_line - hdr_off - start)
+    if opts.preview:
+        keep = keep & (rec < opts.preview)
+    df = df.select(ROW_IDX, rec.alias("__rec"), "line").filter(keep)
+
     delim, quote = opts.delimiter, opts.quote_char
     max_size = opts.max_record_size
+    str_list = pa.list_(pa.string())
 
-    out_schema = T.StructType(
-        [
-            T.StructField(ROW_IDX, T.LongType()),
-            T.StructField("fields", T.ArrayType(T.StringType())),
-            T.StructField("n_fields", T.IntegerType()),
-            T.StructField("err_codes", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def parse_batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            idxs, fields_col, nf_col, err_col = [], [], [], []
-            for line, idx in zip(pdf["line"], pdf[ROW_IDX]):
+    def parse_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            fields_col, nf_col, err_col = [], [], []
+            for line in batch.column("line").to_pylist():
                 if max_size is not None and len(line.encode("utf-8")) > max_size:
                     errs = [ERR_MAX_RECORD_SIZE]
                     vals: list = []
@@ -794,46 +841,25 @@ def _read_exact(
                         errs = errs + [ERR_TOO_FEW]
                     elif len(vals) > n_cols:
                         errs = errs + [ERR_TOO_MANY]
-                idxs.append(idx)
                 fields_col.append(vals)
                 nf_col.append(len(vals))
                 err_col.append(errs)
-            yield pd.DataFrame(
-                {
-                    ROW_IDX: idxs,
-                    "fields": fields_col,
-                    "n_fields": nf_col,
-                    "err_codes": err_col,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(ROW_IDX),
+                    batch.column("__rec"),
+                    pa.array(fields_col, type=str_list),
+                    pa.array(nf_col, type=pa.int32()),
+                    pa.array(err_col, type=str_list),
+                ],
+                names=[ROW_IDX, "__rec", "fields", "n_fields", "err_codes"],
             )
 
-    parsed = df.mapInPandas(parse_batches, schema=out_schema)
-
-    # Record numbering for fromLine/toLine. The reference counts 1-based
-    # FILE lines with the header as line 1 (parser.ts:1504-1513:
-    # fromRecord = fromLine - headerOffset - 1), so with a header every
-    # bound shifts down one record: fromLine=3 starts at the 2nd data
-    # record. Clamped at record 1.
-    # Scale note: the row_number window is global (single task) — it only
-    # engages when a line-range option is set, which is inherently an
-    # ordered-file operation (exact/fidelity path, not the 100 TB path).
-    if opts.from_line is not None or opts.to_line is not None or opts.preview:
-        from pyspark.sql import Window
-
-        hdr_off = 1 if opts.has_header else 0
-        w = Window.orderBy(ROW_IDX)
-        parsed = parsed.withColumn("__rec", F.row_number().over(w))
-        start = 1
-        if opts.from_line is not None:
-            start = max(1, opts.from_line - hdr_off)
-            parsed = parsed.filter(F.col("__rec") >= start)
-        if opts.to_line is not None:
-            parsed = parsed.filter(F.col("__rec") <= opts.to_line - hdr_off)
-        if opts.preview:
-            parsed = parsed.filter(F.col("__rec") < start + opts.preview)
-        parsed = parsed.drop("__rec")
-
-    parsed = parsed.cache()
+    parsed = df.mapInArrow(
+        parse_batches,
+        schema=f"{ROW_IDX} bigint, __rec bigint, fields array<string>, "
+        "n_fields int, err_codes array<string>",
+    ).localCheckpoint(eager=False)
 
     # error records, minus relaxed kinds (parser.ts:137-153, 1270-1302);
     # one output row per (line, code) with the reference's type category
@@ -844,16 +870,9 @@ def _read_exact(
         relaxed.add(ERR_TOO_FEW)
     if opts.relax_column_count or opts.relax_column_count_more:
         relaxed.add(ERR_TOO_MANY)
-    # The reference's CSVError.row is the 0-based DATA-row index — it does
-    # not count the header or skipped/comment/blank lines (errors.ts:49) —
-    # so renumber the surviving records before exploding. The global window
-    # is lazy: it executes only when the errors frame is consumed.
-    from pyspark.sql import Window
-
-    w_err = Window.orderBy(ROW_IDX)
-    exploded = parsed.withColumn(
-        "__rec0", F.row_number().over(w_err) - 1
-    ).select(F.col("__rec0"), "n_fields", F.explode("err_codes").alias("code"))
+    exploded = parsed.select(
+        "__rec", "n_fields", F.explode("err_codes").alias("code")
+    )
     if relaxed:
         exploded = exploded.filter(~F.col("code").isin(*relaxed))
     type_map = F.create_map(
@@ -871,7 +890,7 @@ def _read_exact(
         .otherwise(F.concat(F.lit("malformed quoting: "), F.col("code")))
     )
     errors = exploded.select(
-        F.col("__rec0").alias("row"),
+        F.col("__rec").alias("row"),
         type_map[F.col("code")].alias("type"),
         "code",
         message.alias("message"),

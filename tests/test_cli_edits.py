@@ -220,3 +220,19 @@ def test_edit_discard(indexed_df):
     log.clear()
     out = rows_of(log.apply(indexed_df))
     assert out[0] == ("Alice", "30", "NYC")
+
+
+def test_cli_validate_prints_first_ten_issues_in_row_order(capsys, spark, write_csv_file):
+    # 13 issues; row 0 carries two codes, listed quote error first
+    lines = ["a,b", 'x,"q"j,z'] + [f"{i}" if i % 2 else f"{i},{i}" for i in range(24)]
+    bad = write_csv_file("\n".join(lines) + "\n", name="many.csv")
+    rc, out, _ = run_cli(capsys, spark, ["validate", bad])
+    assert rc == 1
+    issues = ["  Row 0: [NonTrimableCharAfterClosingQuote] malformed quoting: "
+              "NonTrimableCharAfterClosingQuote",
+              "  Row 0: [TooManyFields] expected 2 fields, got 3"]
+    issues += [f"  Row {i + 1}: [TooFewFields] expected 2 fields, got 1" for i in range(1, 17, 2)]
+    assert out == "\n".join(
+        ["INVALID: 14 issue(s):", *issues, "  ... and 4 more", "",
+         "Rows: 25", "Columns: 2", "Headers: a, b", ""]
+    )

@@ -326,3 +326,159 @@ def test_multiline_quoted_newline(spark, write_csv_file):
     vals = {r.a: r.b for r in df.collect()}
     assert vals["1"] == "line1\nline2"
     assert vals["2"] == "plain"
+
+
+# -- exact path: split-level line numbering -----------------------------------
+
+
+def test_tokenize_multichar_delimiter():
+    from bun_csv_spark.sources.csv_reader import _tokenize_line
+
+    assert _tokenize_line("a::b::c", "::", '"')[0] == ["a", "b", "c"]
+    assert _tokenize_line('"x::y"::::z', "::", '"')[0] == ["x::y", None, "z"]
+
+
+def test_auto_delimiter_ignores_comment_lines(spark, write_csv_file):
+    # a leading comment with a comma plus "; " inside quoted fields made
+    # the sniffer pick ";" and read the header as one column
+    body = [
+        "# exported ledger, comments start with #",
+        "id,name,city,comment,score,tag",
+    ]
+    for i in range(1, 11):
+        note = "long " + "ß" * 40 if i == 7 else "card, wire; ok"
+        if i == 4:
+            body.append(f"# note {i} — ignored")
+        else:
+            body.append(f'{i},"Ada ""Xu"" {i}","Kraków","{note}",{i * 7},"t"')
+    path = write_csv_file("\n".join(body) + "\n", name="ledger.csv")
+    opts = CSVOptions(delimiter="auto", comments="#", with_row_index=True)
+    df, _ = read_csv_with_errors(spark, path, opts)
+    assert df.columns[1:7] == ["id", "name", "city", "comment", "score", "tag"]
+    assert [r.id for r in df.orderBy("__row_idx").collect()][-2:] == ["9", "10"]
+    assert detect_delimiter("\n".join(body))[0] == ";"  # what the comments did
+
+    from bun_csv_spark.sources.csv_reader import reader_meta
+
+    assert reader_meta(spark, path, opts)["delimiter"] == ","
+
+
+def test_header_probe_breaks_lines_like_the_text_source(spark, write_csv_file):
+    # \x0c and \u2028 are not line breaks for Spark's text source, so the
+    # driver-side header probe must not count them as ones either
+    path = write_csv_file("skip\x0cme\u2028too\na,b\n1,2\n")
+    data, errors = read_csv_with_errors(spark, path, CSVOptions(skip_first_n_lines=1))
+    assert data.columns[:2] == ["a", "b"]
+    assert [(r.a, r.b) for r in data.collect()] == [("1", "2")]
+    assert errors.count() == 0
+
+
+def test_exact_path_probes_header_through_spark_when_not_local(spark, tmp_path):
+    # gzip input has no driver-side head chunk: the header and the rank of
+    # the first record come from one top-1 job on the indexed frame
+    import gzip
+
+    p = tmp_path / "ragged.csv.gz"
+    with gzip.open(p, "wt") as f:
+        f.write("junk\n# c\n\na,b\n1,x\n# d\n2\n3,z\n4,w\n")
+    opts = CSVOptions(skip_first_n_lines=1, comments="#", from_line=3, with_row_index=True)
+    data, errors = read_csv_with_errors(spark, str(p), opts)
+    assert [(r["__row_idx"], r.a, r.b) for r in data.orderBy("__row_idx").collect()] == [
+        (6, "2", None), (7, "3", "z"), (8, "4", "w")
+    ]
+    assert [(r.row, r.code) for r in errors.collect()] == [(0, "TooFewFields")]
+
+
+def _packed_dir(tmp_path):
+    """12 small files of growing size: Spark packs their splits into
+    partitions by size, not by name."""
+    d = tmp_path / "parts"
+    d.mkdir()
+    expect = []
+    for k in range(12):
+        rows = [f"{k}-{j},{j}" for j in range(3 + k)]
+        (d / f"f{k:02d}.csv").write_text(("id,v\n" if k == 0 else "") + "\n".join(rows) + "\n")
+        expect += rows
+    return str(d), expect
+
+
+def test_packed_directory_indexes_in_name_order(spark, tmp_path, capsys):
+    from bun_csv_spark.cli.main import main
+
+    path, expect = _packed_dir(tmp_path)
+    assert spark.read.text(path).rdd.getNumPartitions() < 12  # files share partitions
+    df = read_csv(spark, path, CSVOptions(with_row_index=True))
+    assert df.columns[1:3] == ["id", "v"]
+    got = [(r["__row_idx"], f"{r.id},{r.v}") for r in df.orderBy("__row_idx").collect()]
+    assert got == [(i + 1, row) for i, row in enumerate(expect)]
+
+    assert main(["-f", "csv", "tail", "-n", "2", path], spark=spark) == 0
+    assert capsys.readouterr().out.splitlines()[1:] == ["11-12,12,", "11-13,13,"]
+
+
+def test_exact_reread_after_rewrite_sees_new_rows(spark, write_csv_file):
+    # same line count and lengths: only the values change between reads
+    opts = CSVOptions(with_row_index=True, comments="#")
+    path = write_csv_file("# c\na,b\n" + "".join(f"x{i},1\n" for i in range(5)))
+    data, errors = read_csv_with_errors(spark, path, opts)
+    assert [r.a for r in data.orderBy("__row_idx").collect()] == [f"x{i}" for i in range(5)]
+    assert errors.count() == 0
+    write_csv_file("# c\na,b\n" + "".join(f"y{i},2\n" for i in range(5)))
+    data, _ = read_csv_with_errors(spark, path, opts)
+    assert [(r.a, r.b) for r in data.orderBy("__row_idx").collect()] == [
+        (f"y{i}", "2") for i in range(5)
+    ]
+
+
+def test_exact_plan_has_no_window_and_one_build_job(spark, write_csv_file, monkeypatch):
+    path = write_csv_file(
+        "# c\na,b\n" + "".join(f"{i},{i}\n" if i % 3 else f"{i}\n" for i in range(30))
+    )
+    opts = CSVOptions(comments="#", from_line=3, to_line=20, with_row_index=True)
+    # run the parse unmaterialized so its whole plan stays visible
+    frame_cls = type(spark.range(1))
+    monkeypatch.setattr(frame_cls, "localCheckpoint", lambda self, eager=True: self)
+    sc = spark.sparkContext
+    sc.setJobGroup("exact-build", "exact path build")
+    try:
+        data, errors = read_csv_with_errors(spark, path, opts)
+    finally:
+        sc.setJobGroup("", "")
+    # the one stats aggregation: its shuffle-map job and its result job
+    assert len(sc.statusTracker().getJobIdsForGroup("exact-build")) == 2
+    for frame in (data, errors):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        for node in ("Window", "Join", "ExistingRDD", "LocalTableScan"):
+            assert node not in plan, (node, plan)
+    assert [r.row for r in errors.orderBy("row").collect()] == [2, 5, 8, 11, 14, 17]
+    assert data.count() == 18
+
+
+@pytest.mark.parametrize("delim", [",", "|", "\t", "::"])
+def test_native_and_exact_paths_agree_on_fuzz_rows(spark, tmp_path, delim):
+    import csv
+    import io
+
+    from bun_csv_spark.testing import fuzz_csv
+
+    records = [
+        r
+        for r in csv.reader(io.StringIO(fuzz_csv(rows=80, seed=3)))
+        if not any("\n" in v for v in r)  # single-line records only
+    ]
+
+    def field(v):
+        if any(c in v for c in (delim, '"')):
+            return '"' + v.replace('"', '""') + '"'
+        return v
+
+    p = tmp_path / "fuzz.csv"
+    p.write_text("".join(delim.join(map(field, r)) + "\n" for r in records))
+    native = read_csv(spark, str(p), CSVOptions(delimiter=delim))
+    exact = read_csv(spark, str(p), CSVOptions(delimiter=delim, with_row_index=True))
+    assert native.columns == ["id", "payload", "note"]
+    exact_rows = [
+        tuple(r[c] for c in native.columns) for r in exact.orderBy("__row_idx").collect()
+    ]
+    native_rows = sorted((tuple(r) for r in native.collect()), key=lambda r: int(r[0]))
+    assert exact_rows == native_rows == [tuple(r) for r in records[1:]]

@@ -104,6 +104,9 @@ def test_reader_on_record_hook(spark, write_csv_file):
     assert read_csv(spark, path, opts).count() == 2
 
 
+_CUT = ("x" * 1023 + "ó" + "Kraków\n" * 50).encode("utf-8")  # "ó" spans bytes 1023-1024
+
+
 @pytest.mark.parametrize(
     "data,expected",
     [
@@ -121,6 +124,11 @@ def test_reader_on_record_hook(spark, write_csv_file):
         ("héllo".encode("latin-1") * 10, "cp1252"),
         ("curly “quote”".encode("cp1252"), "cp1252"),
         (b"", None),
+        # a two-byte character cut by the 1 KB window is still UTF-8 (else
+        # "Kraków" would be transcoded to "KrakÃ³w") ...
+        pytest.param(_CUT, "utf-8", id="utf8-cut-by-window"),
+        # ... unless the input ends there: then it is invalid UTF-8
+        pytest.param(_CUT[:1024], "cp1252", id="utf8-truncated-input"),
     ],
 )
 def test_detect_encoding(data, expected):
